@@ -77,6 +77,14 @@ def s3a_conf(
     return conf
 
 
+def usable_cpus() -> int:
+    """Cores this process may run on: ``$SPARK_GRAFT_CPUS``, else the
+    scheduler affinity mask (a container's CPU limit, not the host's)."""
+    if "SPARK_GRAFT_CPUS" in os.environ:
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    return len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "big-data-pipeline-spark",
     master: str | None = None,

@@ -19,10 +19,11 @@ processing-time timeouts keep scheduling extra micro-batches after an
 terminates (observed: hundreds of empty batches) — and the drain is
 this engine's verification path.
 
-The EWMA recurrence is order-sensitive; events are sorted by (ts,
-event_id) inside each batch, and correctness is asserted against a
-batch pandas recomputation in tests (availableNow = single batch, so
-the recurrence sees every event exactly once, in order).
+The EWMA recurrence is order-sensitive; each micro-batch's events of a
+group are sorted by (ts, event_id) across all the Arrow batches they
+arrive in, and correctness is asserted against a batch pandas
+recomputation in tests (availableNow = single batch, so the recurrence
+sees every event exactly once, in order).
 """
 
 from __future__ import annotations
@@ -63,16 +64,17 @@ def _advance_stats(
     and transformWithStateInPandas): one implementation, so the
     equivalence the tests assert can't silently desynchronize."""
     n, total, ewma = stats
-    for pdf in batches:
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
-        for v in pdf["value"]:
-            n += 1
-            total += float(v)
-            ewma = (
-                float(v)
-                if ewma is None
-                else _ALPHA * float(v) + (1 - _ALPHA) * ewma
-            )
+    # A group's micro-batch arrives as several Arrow batches (at most
+    # spark.sql.execution.arrow.maxRecordsPerBatch rows each) in no
+    # particular order: sort the whole group, not each batch.
+    pdfs = list(batches)
+    if not pdfs:
+        return stats
+    pdf = pd.concat(pdfs, ignore_index=True)
+    for v in pdf.sort_values(["ts", "event_id"], kind="mergesort")["value"]:
+        n += 1
+        total += float(v)
+        ewma = float(v) if ewma is None else _ALPHA * float(v) + (1 - _ALPHA) * ewma
     return n, total, ewma
 
 

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from big_data_pipeline_spark.io import read_table
 from big_data_pipeline_spark.oracle import (
     DEC,
+    exact_avg,
     exact_avg_sql,
     exact_sum,
     exact_sum_sql,
@@ -80,9 +81,7 @@ def left_join_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             # COUNT(col) skips nulls → 0 for order-less customers
             F.count("o_orderkey").alias("n_orders"),
-            F.coalesce(
-                F.sum(F.col("o_totalprice").cast(DEC)).cast("double"), F.lit(0.0)
-            ).alias("total_spend"),
+            F.coalesce(exact_sum("o_totalprice"), F.lit(0.0)).alias("total_spend"),
         )
     )
 
@@ -246,9 +245,7 @@ SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
 def above_customer_avg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = read_table(spark, sf_dir, "orders")
     cust_avg = orders.groupBy(F.col("o_custkey").alias("k")).agg(
-        (F.sum(F.col("o_totalprice").cast(DEC)).cast("double") / F.count(F.lit(1))).alias(
-            "cust_avg"
-        )
+        exact_avg("o_totalprice", "cust_avg")
     )
     return (
         orders.join(cust_avg, orders.o_custkey == cust_avg.k)
@@ -728,10 +725,10 @@ def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     per_region = per_nation.groupBy("r_name").agg(
-        F.sum(F.col("revenue").cast(DEC)).cast("double").alias("region_rev")
+        exact_sum("revenue", "region_rev")
     )
     total = per_nation.agg(
-        F.sum(F.col("revenue").cast(DEC)).cast("double").alias("total_rev")
+        exact_sum("revenue", "total_rev")
     )
     return (
         per_nation.join(F.broadcast(per_region), "r_name")

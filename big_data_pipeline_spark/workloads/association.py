@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_pipeline_spark.io import read_table
+from big_data_pipeline_spark.oracle import exact_sum
 
 _MIN_PAIR_SUPPORT = 2
 _TOP_K = 100
@@ -130,7 +131,7 @@ def item_item_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_CF_CAP``, i.e. linear in users with a constant factor — an
     unbounded heavy user would otherwise contribute quadratic pairs
     (same failure mode salting addresses in joins). Ratings and the
-    pair products route through DECIMAL(38,6) so cosine is
+    pair products sum through the exact-sum kernel so cosine is
     order-insensitive and cross-engine exact; norms are computed from
     the SAME capped rating set, so cosine <= 1 holds exactly.
     """
@@ -146,9 +147,7 @@ def item_item_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(F.col("o_custkey"))
         .groupBy("o_custkey", "l_partkey")
         .agg(
-            F.sum(F.col("l_quantity").cast("decimal(38,6)"))
-            .cast("double")
-            .alias("r")
+            exact_sum("l_quantity", "r")
         )
     )
     from pyspark.sql import Window
@@ -166,9 +165,7 @@ def item_item_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_custkey", "l_partkey", "r")
     )
     norms = ratings.groupBy(F.col("l_partkey")).agg(
-        F.sum((F.col("r") * F.col("r")).cast("decimal(38,6)"))
-        .cast("double")
-        .alias("sqn")
+        exact_sum("r * r", "sqn")
     )
     a = ratings.select(
         F.col("o_custkey").alias("u"),
@@ -190,9 +187,7 @@ def item_item_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("part_i", "part_j")
         .agg(
             F.count(F.lit(1)).alias("n_common_users"),
-            F.sum((F.col("ri") * F.col("rj")).cast("decimal(38,6)"))
-            .cast("double")
-            .alias("num"),
+            exact_sum("ri * rj", "num"),
         )
         .filter(F.col("n_common_users") >= _CF_MIN_USERS)
     )
@@ -357,9 +352,7 @@ def copurchase_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("pu").alias("part1"), F.col("pw").alias("part2"))
         .agg(
             F.count(F.lit(1)).alias("n_common_neighbors"),
-            F.sum((F.lit(1.0) / F.col("deg")).cast("decimal(38,6)"))
-            .cast("double")
-            .alias("ra_score"),
+            exact_sum("1.0D / deg", "ra_score"),
         )
     )
     pred = scored.join(edges.select("part1", "part2"), ["part1", "part2"], "left_anti")

@@ -416,7 +416,7 @@ _RFM_BUCKETS = 5
 
 def rfm_user_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_pipeline_spark.operators.prefix import sharded_running_sum
-    from big_data_pipeline_spark.oracle import DEC
+    from big_data_pipeline_spark.oracle import exact_sum
 
     events = read_table(spark, sf_dir, "events")
     maxd = events.select(F.max(F.to_date("ts")).alias("maxd"))
@@ -427,13 +427,10 @@ def rfm_user_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 (F.col("event_type") == "purchase").cast("long")
             ).alias("frequency"),
-            F.sum(
-                F.when(F.col("event_type") == "purchase", F.col("value"))
-                .otherwise(0.0)
-                .cast(DEC)
-            )
-            .cast("double")
-            .alias("monetary"),
+            exact_sum(
+                "CASE WHEN event_type = 'purchase' THEN value ELSE 0.0D END",
+                "monetary",
+            ),
         )
         .crossJoin(F.broadcast(maxd))
         .select(

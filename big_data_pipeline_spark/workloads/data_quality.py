@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from big_data_pipeline_spark.io import read_table
+from big_data_pipeline_spark.oracle import exact_sum
 from big_data_pipeline_spark.quality import (
     expect_accepted_values,
     expect_between,
@@ -223,8 +224,9 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     for child, fk, parent, pk in _FK_RELATIONS:
         by_child.setdefault(child, []).append((fk, parent, pk))
 
-    # output rows must keep the _FK_RELATIONS order
-    row_frames: dict[tuple[str, str], DataFrame] = {}
+    # output rows must keep the _FK_RELATIONS order; keyed by the whole
+    # relation, since two edges may share a child and fk column
+    row_frames: dict[tuple[str, str, str, str], DataFrame] = {}
     for child, edges in by_child.items():
         joined = read_table(spark, sf_dir, child).select(
             *[F.col(fk).alias(f"fk_{i}") for i, (fk, _, _) in enumerate(edges)]
@@ -259,16 +261,14 @@ def fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         stats = joined.agg(*aggs)
         for i, (fk, parent, pk) in enumerate(edges):
-            row_frames[(child, fk)] = stats.select(
+            row_frames[(child, fk, parent, pk)] = stats.select(
                 F.lit(f"{child}.{fk}->{parent}.{pk}").alias("relation"),
                 F.col("n_child_rows"),
                 F.col(f"n_null_fk_{i}").alias("n_null_fk"),
                 F.col(f"n_orphan_rows_{i}").alias("n_orphan_rows"),
                 F.col(f"n_orphan_keys_{i}").alias("n_orphan_keys"),
             )
-    parts = [
-        row_frames[(child, fk)] for child, fk, _, _ in _FK_RELATIONS
-    ]
+    parts = [row_frames[rel] for rel in _FK_RELATIONS]
     return reduce(lambda a, b: a.unionAll(b), parts)
 
 
@@ -425,8 +425,8 @@ moments AS (
 # engines' expression text (repr round-trips exactly; strtod parses
 # correctly-rounded in both), counts are exact integers, each per-row
 # double derives through the identical IEEE op stream, and the
-# chi-square contributions accumulate as DECIMAL(38,6) so the group sum
-# is order-insensitive. Absent digits materialize via a priority x 1..9
+# chi-square contributions sum through the exact-sum kernel so the group
+# sum is order-insensitive. Absent digits materialize via a priority x 1..9
 # grid so zero-count cells still contribute n*P(d) to the statistic.
 #
 # Scale (100 TB): one map-side-combinable count onto (|priorities| x 9)
@@ -481,11 +481,7 @@ def benford_deviation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("exp_share", F.expr(_BENFORD_CASE))
         .withColumn("contrib", F.expr(_CONTRIB))
     )
-    chi2 = cell.groupBy("o_orderpriority").agg(
-        F.sum(F.col("contrib").cast("decimal(38,6)"))
-        .cast("double")
-        .alias("chi2")
-    )
+    chi2 = cell.groupBy("o_orderpriority").agg(exact_sum("contrib", "chi2"))
     return cell.join(F.broadcast(chi2), "o_orderpriority").select(
         "o_orderpriority", "digit", "n_obs", "obs_share", "exp_share", "chi2"
     )

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from big_data_pipeline_spark.io import read_table
-from big_data_pipeline_spark.oracle import DEC, exact_sum, exact_sum_sql
+from big_data_pipeline_spark.oracle import DEC, exact_avg, exact_sum, exact_sum_sql
 
 # --- window_lead_next_value (W1): shift(-1) within key ----------------------
 
@@ -103,12 +103,9 @@ def grouped_mse(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("m", mean)
         .groupBy("user_id")
         .agg(
-            (
-                # (x)*(x), not pow(x,2): one IEEE multiply needs no libm
-                # parity between JVM and C across engines
-                F.sum(F.expr("(value - m) * (value - m)").cast(DEC)).cast("double")
-                / F.count(F.lit(1))
-            ).alias("mse"),
+            # (x)*(x), not pow(x,2): one IEEE multiply needs no libm
+            # parity between JVM and C across engines
+            exact_avg("(value - m) * (value - m)", "mse"),
             F.count(F.lit(1)).alias("n_events"),
         )
     )
@@ -356,11 +353,11 @@ def linreg_next_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = ordered.filter(F.col("y").isNotNull())
     stats = pairs.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(F.col("x").cast(DEC)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(DEC)).cast("double").alias("sy"),
-        F.sum(F.expr("x * x").cast(DEC)).cast("double").alias("sxx"),
-        F.sum(F.expr("x * y").cast(DEC)).cast("double").alias("sxy"),
-        F.sum(F.expr("y * y").cast(DEC)).cast("double").alias("syy"),
+        exact_sum("x", "sx"),
+        exact_sum("y", "sy"),
+        exact_sum("x * x", "sxx"),
+        exact_sum("x * y", "sxy"),
+        exact_sum("y * y", "syy"),
     )
     last_row = ordered.filter(F.col("rn") == 1).select(
         "user_id",
@@ -531,10 +528,8 @@ def interarrival_rate_mle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = gaps.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(F.col("gap_sec").cast(DEC)).cast("double").alias("s1"),
-        F.sum((F.col("gap_sec") * F.col("gap_sec")).cast(DEC))
-        .cast("double")
-        .alias("s2"),
+        exact_sum("gap_sec", "s1"),
+        exact_sum("gap_sec * gap_sec", "s2"),
     )
     mean_sec = F.col("s1") / F.col("n")
     var_sec = (F.col("n") * F.col("s2") - F.col("s1") * F.col("s1")) / (

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_pipeline_spark.io import read_table
-from big_data_pipeline_spark.oracle import DEC, _dec_to_double_sql
+from big_data_pipeline_spark.oracle import _dec_to_double_sql, exact_avg, exact_sum
 
 # z critical value for a two-sided 95% test (shared literal so Spark
 # and the oracle compare against the identical constant)
@@ -42,6 +42,10 @@ _CONV_MIN_VALUE = 150.0
 
 # CUPED pre/post split of the one-month event window
 _CUPED_SPLIT = "2024-01-16 00:00:00"
+# a user's purchase value before / after the split (NULL on the other side)
+_PURCHASE_VAL = "CASE WHEN event_type = 'purchase' THEN value ELSE 0.0D END"
+_PRE_PURCHASE = f"CASE WHEN ts < TIMESTAMP '{_CUPED_SPLIT}' THEN {_PURCHASE_VAL} END"
+_POST_PURCHASE = f"CASE WHEN ts >= TIMESTAMP '{_CUPED_SPLIT}' THEN {_PURCHASE_VAL} END"
 
 
 def ab_conversion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -155,32 +159,20 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type", "value"
     )
-    split = F.lit(_CUPED_SPLIT).cast("timestamp")
-    purchase_val = F.when(
-        F.col("event_type") == "purchase", F.col("value")
-    ).otherwise(0.0)
     users = (
         events.groupBy("user_id")
         .agg(
-            F.coalesce(
-                F.sum(F.when(F.col("ts") < split, purchase_val).cast(DEC))
-                .cast("double"),
-                F.lit(0.0),
-            ).alias("x"),
-            F.coalesce(
-                F.sum(F.when(F.col("ts") >= split, purchase_val).cast(DEC))
-                .cast("double"),
-                F.lit(0.0),
-            ).alias("y"),
+            F.coalesce(exact_sum(_PRE_PURCHASE), F.lit(0.0)).alias("x"),
+            F.coalesce(exact_sum(_POST_PURCHASE), F.lit(0.0)).alias("y"),
         )
         .withColumn("variant", F.col("user_id") % 2)
     )
     stats = users.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(F.col("x").cast(DEC)).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(DEC)).cast("double").alias("sy"),
-        F.sum((F.col("x") * F.col("y")).cast(DEC)).cast("double").alias("sxy"),
-        F.sum((F.col("x") * F.col("x")).cast(DEC)).cast("double").alias("sxx"),
+        exact_sum("x", "sx"),
+        exact_sum("y", "sy"),
+        exact_sum("x * y", "sxy"),
+        exact_sum("x * x", "sxx"),
     ).select(
         (
             (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
@@ -195,13 +187,8 @@ def cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         adj.groupBy("variant")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_users"),
-            (
-                F.sum(F.col("y").cast(DEC)).cast("double") / F.count(F.lit(1))
-            ).alias("mean_post"),
-            (
-                F.sum(F.col("adj").cast(DEC)).cast("double")
-                / F.count(F.lit(1))
-            ).alias("mean_adjusted"),
+            exact_avg("y", "mean_post"),
+            exact_avg("adj", "mean_adjusted"),
             F.first("theta").alias("theta"),
         )
     )
@@ -323,31 +310,18 @@ def did_purchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type", "value"
     )
-    split = F.lit(_CUPED_SPLIT).cast("timestamp")
-    purchase_val = F.when(
-        F.col("event_type") == "purchase", F.col("value")
-    ).otherwise(0.0)
     users = (
         events.groupBy("user_id")
         .agg(
-            F.coalesce(
-                F.sum(F.when(F.col("ts") < split, purchase_val).cast(DEC))
-                .cast("double"),
-                F.lit(0.0),
-            ).alias("x"),
-            F.coalesce(
-                F.sum(F.when(F.col("ts") >= split, purchase_val).cast(DEC))
-                .cast("double"),
-                F.lit(0.0),
-            ).alias("y"),
+            F.coalesce(exact_sum(_PRE_PURCHASE), F.lit(0.0)).alias("x"),
+            F.coalesce(exact_sum(_POST_PURCHASE), F.lit(0.0)).alias("y"),
         )
         .withColumn("variant", F.col("user_id") % 2)
     )
 
     def cell(var: int, col: str) -> F.Column:
-        return F.sum(
-            F.when(F.col("variant") == var, F.col(col)).otherwise(0.0).cast(DEC)
-        ).cast("double") / F.sum(
+        val = f"CASE WHEN variant = {var} THEN {col} ELSE 0.0D END"
+        return exact_sum(val) / F.sum(
             F.when(F.col("variant") == var, 1).otherwise(0)
         )
 
@@ -422,18 +396,18 @@ def delta_method_ratio_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.filter(F.col("event_type") == "purchase")
         .groupBy("user_id")
         .agg(
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("y"),
+            exact_sum("value", "y"),
             F.count(F.lit(1)).cast("double").alias("m"),
         )
         .withColumn("variant", F.col("user_id") % 2)
     )
     g = users.groupBy("variant").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(F.col("y").cast(DEC)).cast("double").alias("sy"),
-        F.sum(F.col("m").cast(DEC)).cast("double").alias("sm"),
-        F.sum((F.col("y") * F.col("y")).cast(DEC)).cast("double").alias("syy"),
-        F.sum((F.col("y") * F.col("m")).cast(DEC)).cast("double").alias("sym"),
-        F.sum((F.col("m") * F.col("m")).cast(DEC)).cast("double").alias("smm"),
+        exact_sum("y", "sy"),
+        exact_sum("m", "sm"),
+        exact_sum("y * y", "syy"),
+        exact_sum("y * m", "sym"),
+        exact_sum("m * m", "smm"),
     )
     ybar = F.col("sy") / F.col("n")
     mbar = F.col("sm") / F.col("n")

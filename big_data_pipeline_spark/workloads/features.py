@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from big_data_pipeline_spark.io import read_table
-from big_data_pipeline_spark.oracle import DEC
+from big_data_pipeline_spark.oracle import DEC, exact_sum
 
 # --- per-user lag returns + rolling stats -----------------------------------
 
@@ -92,7 +92,7 @@ def time_rollup_multigrain(spark: SparkSession, sf_dir: str) -> DataFrame:
         [["hour_start"], ["day_start"]], "hour_start", "day_start"
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast(DEC)).cast("double").alias("sum_value"),
+        exact_sum("value", "sum_value"),
     )
 
 
@@ -132,13 +132,12 @@ def ses_forecast_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight = F.when(rn == 1, F.pow(F.lit(0.5), n - 1)).otherwise(
         F.pow(F.lit(0.5), n - rn + 1)
     )
-    term = (F.col("value") * weight).cast(DEC)
     return (
-        events.select("user_id", term.alias("term"))
+        events.select("user_id", (F.col("value") * weight).alias("term"))
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum("term").cast("double").alias("ses_value"),
+            exact_sum("term", "ses_value"),
         )
     )
 
@@ -263,12 +262,10 @@ def churn_label_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.groupBy("user_id").agg(
         F.sum(feat.cast("long")).cast("bigint").alias("n_events_feat"),
         F.coalesce(
-            F.sum(
-                F.when(
-                    feat & (F.col("event_type") == "purchase"),
-                    F.col("value"),
-                ).cast(DEC)
-            ).cast("double"),
+            exact_sum(
+                f"CASE WHEN ts < CAST('{_CHURN_SPLIT}' AS TIMESTAMP)"
+                " AND event_type = 'purchase' THEN value END"
+            ),
             F.lit(0.0),
         ).alias("purchase_value_feat"),
         F.count_distinct(

@@ -39,7 +39,12 @@ from big_data_pipeline_spark.functions.vectors import (
     seq_l2_sq,
 )
 from big_data_pipeline_spark.io import read_table
-from big_data_pipeline_spark.oracle import DEC, _dec_to_double_sql
+from big_data_pipeline_spark.oracle import (
+    DEC,
+    _dec_to_double_sql,
+    exact_decimal_sum,
+    exact_sum,
+)
 
 _TOKS_SQL = r"regexp_split_to_array(trim(text), '\s+')"
 _MICRO = 1_000_000
@@ -345,15 +350,12 @@ def lof_knn_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("reach", F.greatest(F.col("kdist_o"), F.col("d")))
     )
     lrd = reach.groupBy("p").agg(
-        (
-            F.lit(float(_LOF_K))
-            / F.sum(F.col("reach").cast(DEC)).cast("double")
-        ).alias("lrd")
+        (F.lit(float(_LOF_K)) / exact_sum("reach")).alias("lrd")
     )
     lof = (
         knn.join(lrd.select(F.col("p").alias("o"), F.col("lrd").alias("lrd_o")), "o")
         .groupBy("p")
-        .agg(F.sum(F.col("lrd_o").cast(DEC)).cast("double").alias("sum_lrd_o"))
+        .agg(exact_sum("lrd_o", "sum_lrd_o"))
         .join(lrd, "p")
         .select(
             F.col("p").alias("vec_id"),
@@ -440,7 +442,7 @@ def target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
     g = orders.groupBy("o_orderpriority").agg(
-        F.sum(F.col("o_totalprice").cast(DEC)).alias("s_dec"),
+        exact_decimal_sum("o_totalprice").alias("s_dec"),
         F.count(F.lit(1)).alias("n"),
     )
     loo = (F.col("s_dec") - F.col("o_totalprice").cast(DEC)).cast(

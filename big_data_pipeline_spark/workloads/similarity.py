@@ -34,7 +34,7 @@ from big_data_pipeline_spark.functions.vectors import (
     sq_norm_sql,
 )
 from big_data_pipeline_spark.io import read_table
-from big_data_pipeline_spark.oracle import exact_avg, exact_avg_sql
+from big_data_pipeline_spark.oracle import exact_avg, exact_avg_sql, exact_sum
 from big_data_pipeline_spark.similarity.knn import ivf_topk, lsh_topk
 
 _N_QUERIES = 100
@@ -207,13 +207,11 @@ def label_centroid_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     row materialization — 2.26s -> ~0.6s at sf0.1, identical hashes.
     """
     emb = read_table(spark, sf_dir, "embeddings")
-    from big_data_pipeline_spark.oracle import DEC
-
     sums = (
         emb.select("label", F.posexplode("embedding").alias("dim", "v"))
         .groupBy("label", "dim")
         .agg(
-            F.sum(F.col("v").cast("double").cast(DEC)).cast("double").alias("s"),
+            exact_sum("v", "s"),
             F.count(F.lit(1)).alias("n"),
         )
         .collect()
@@ -2024,12 +2022,12 @@ def ndcg_matryoshka_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = pre.join(exact, ["query_id", "neighbor_id"], "left").select(
         "query_id",
-        (rel * disc).cast("decimal(38,6)").alias("gain"),
+        (rel * disc).alias("gain"),
         F.when(F.col("exact_rank").isNotNull(), 1).otherwise(0).alias("hit"),
     )
     return scored.groupBy("query_id").agg(
-        F.sum("gain").cast("double").alias("dcg"),
-        (F.sum("gain").cast("double") / F.lit(_NDCG_IDCG)).alias("ndcg"),
+        exact_sum("gain", "dcg"),
+        (exact_sum("gain") / F.lit(_NDCG_IDCG)).alias("ndcg"),
         F.sum("hit").cast("bigint").alias("n_overlap"),
     )
 

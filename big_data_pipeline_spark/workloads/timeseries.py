@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from big_data_pipeline_spark.io import read_table
 from big_data_pipeline_spark.operators import asof_join, range_join_binned
-from big_data_pipeline_spark.oracle import DEC
+from big_data_pipeline_spark.oracle import DEC, exact_sum
 
 # --- as-of join: last purchase value at or before each event ----------------
 
@@ -158,8 +158,8 @@ LEFT JOIN hourly h ON s.user_id = h.user_id AND s.hour_ts = h.hour_ts
 # a quiet-hour spike a global z-score (zscore_outlier_orders) dilutes
 # away. Two-pass shape: one map-side-combinable moment aggregation per
 # (type, hour) — 24×|types| rows — broadcast back, residual computed
-# row-side from a SHARED formula text. The value sums route through
-# DECIMAL(38,6) (order-insensitive) and both engines evaluate the same
+# row-side from a SHARED formula text. The value sums go through the
+# exact-sum kernel (order-insensitive) and both engines evaluate the same
 # expression string, so flags and residual doubles hash-match.
 
 _SEAS = "(value - s / n)"
@@ -168,17 +168,13 @@ _SEAS_K = 2.0
 
 
 def seasonal_residual_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_pipeline_spark.oracle import DEC
-
     events = read_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value", F.hour("ts").alias("hod")
     )
     prof = events.groupBy("event_type", "hod").agg(
         F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(F.col("value").cast(DEC)).cast("double").alias("s"),
-        F.sum((F.col("value") * F.col("value")).cast(DEC))
-        .cast("double")
-        .alias("ss"),
+        exact_sum("value", "s"),
+        exact_sum("value * value", "ss"),
     )
     return (
         events.join(F.broadcast(prof), ["event_type", "hod"])
@@ -790,7 +786,7 @@ def promo_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return hits.groupBy("promo_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast(DEC)).cast("double").alias("revenue"),
+        exact_sum("o_totalprice", "revenue"),
     )
 
 
@@ -850,7 +846,7 @@ def ohlc_daily_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("value").alias("low"),
         F.max(F.when(F.col("rn_d") == 1, F.col("value"))).alias("close"),
         F.count(F.lit(1)).cast("bigint").alias("volume"),
-        F.sum(F.col("value").cast(DEC)).cast("double").alias("sum_value"),
+        exact_sum("value", "sum_value"),
     )
 
 
@@ -890,7 +886,7 @@ def yoy_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly = orders.groupBy(
         F.year("o_orderdate").alias("yr"),
         F.month("o_orderdate").alias("mo"),
-    ).agg(F.sum(F.col("o_totalprice").cast(DEC)).cast("double").alias("revenue"))
+    ).agg(exact_sum("o_totalprice", "revenue"))
     prev = monthly.select(
         (F.col("yr") + 1).alias("yr"),
         "mo",

@@ -126,10 +126,8 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp_nation = nation.select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
     )
-    rev = F.expr("l_extendedprice * (1 - l_discount)").cast("decimal(38,6)")
-    national = F.when(F.col("supp_nation") == _Q8_NATION, rev).otherwise(
-        F.lit(0).cast("decimal(38,6)")
-    )
+    rev = "l_extendedprice * (1 - l_discount)"
+    national = f"CASE WHEN supp_nation = '{_Q8_NATION}' THEN {rev} ELSE 0.0D END"
     return (
         lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey"))
@@ -138,10 +136,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(supp_nation), F.col("s_nationkey") == F.col("s_nkey"))
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
-            (
-                F.sum(national).cast("double")
-                / F.sum(rev).cast("double")
-            ).alias("mkt_share")
+            (exact_sum(national) / exact_sum(rev)).alias("mkt_share")
         )
     )
 
@@ -253,18 +248,12 @@ def q14_brand_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem = read_table(spark, sf_dir, "lineitem")
     part = read_table(spark, sf_dir, "part")
     rev = "l_extendedprice * (1 - l_discount)"
-    promo = F.when(F.col("p_type").startswith("PROMO"), F.expr(rev)).otherwise(
-        F.lit(0.0)
-    )
+    promo = f"CASE WHEN startswith(p_type, 'PROMO') THEN {rev} ELSE 0.0D END"
     joined = lineitem.join(
         F.broadcast(part), F.col("l_partkey") == F.col("p_partkey")
     )
     return joined.agg(
-        (
-            F.sum(promo.cast("decimal(38,6)")).cast("double")
-            * 100.0
-            / F.sum(F.expr(rev).cast("decimal(38,6)")).cast("double")
-        ).alias("promo_revenue_pct")
+        (exact_sum(promo) * 100.0 / exact_sum(rev)).alias("promo_revenue_pct")
     )
 
 
@@ -353,7 +342,7 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     avg_bal = customer.agg(
         (
-            F.sum(F.col("c_acctbal").cast("decimal(38,6)")).cast("double")
+            exact_sum("c_acctbal")
             / F.count(F.lit(1))
         ).alias("a")
     )

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from big_data_pipeline_spark.io import read_table
 from big_data_pipeline_spark.oracle import (
     exact_avg,
+    exact_decimal_sum,
     exact_avg_sql,
     exact_sum,
     exact_sum_sql,
@@ -81,7 +82,7 @@ SELECT p_partkey, p_name, p_brand, s_name, s_acctbal FROM ranked WHERE rn = 1
 
 # --- q6-like: forecast revenue change (scan-range aggregate) -----------------
 # The canonical predicate-pushdown showcase: all three filters reach the
-# parquet scan, the agg is a single partial-then-final decimal sum.
+# parquet scan, the agg is a single partial-then-final exact sum.
 
 
 def q6_forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,9 +199,7 @@ def q15_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("l_suppkey")
         .agg(
-            F.sum(
-                F.expr("l_extendedprice * (1 - l_discount)").cast("decimal(38,6)")
-            ).alias("r")
+            exact_decimal_sum("l_extendedprice * (1 - l_discount)").alias("r")
         )
     )
     top = rev.agg(F.max("r").alias("top_r"))
@@ -279,9 +278,7 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_items"),
             (
-                F.sum(F.col("l_extendedprice").cast("decimal(38,6)")).cast(
-                    "double"
-                )
+                exact_sum("l_extendedprice")
                 / 7.0
             ).alias("avg_yearly"),
         )
@@ -432,11 +429,9 @@ def q11_important_part_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(supplier), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("l_partkey")
         .agg(
-            F.sum(
-                F.expr("l_extendedprice * (1 - l_discount)").cast(
-                    "decimal(38,6)"
-                )
-            ).alias("value_dec")
+            exact_decimal_sum("l_extendedprice * (1 - l_discount)").alias(
+                "value_dec"
+            )
         )
     )
     total = per_part.agg(F.sum("value_dec").alias("total_dec"))

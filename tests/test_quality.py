@@ -122,6 +122,37 @@ def test_fk_integrity_audit_counts_planted_orphans(spark, tmp_path):
             assert r.n_orphan_rows == 0
 
 
+def test_fk_integrity_audit_edges_sharing_child_and_fk(spark, sf_dir, monkeypatch):
+    """Two edges from the same child fk column to different parents
+    each keep their own row, equal to the DuckDB twin's."""
+    import duckdb
+
+    from big_data_pipeline_spark.workloads import data_quality as dq
+
+    monkeypatch.setattr(
+        dq,
+        "_FK_RELATIONS",
+        (
+            ("lineitem", "l_suppkey", "supplier", "s_suppkey"),
+            ("lineitem", "l_suppkey", "part", "p_partkey"),
+            ("nation", "n_regionkey", "region", "r_regionkey"),
+        ),
+    )
+    got = [tuple(r) for r in dq.fk_integrity_audit(spark, sf_dir).collect()]
+    con = duckdb.connect()
+    for t in ("lineitem", "supplier", "part", "nation", "region"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    want = [tuple(r) for r in con.execute(dq._fk_audit_sql()).fetchall()]
+    assert [r[0] for r in got] == [
+        "lineitem.l_suppkey->supplier.s_suppkey",
+        "lineitem.l_suppkey->part.p_partkey",
+        "nation.n_regionkey->region.r_regionkey",
+    ]
+    assert sorted(got) == sorted(want)
+
+
 def test_measure_corr_matrix_matches_numpy(spark, sf_dir):
     import numpy as np
 

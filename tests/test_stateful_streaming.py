@@ -46,6 +46,44 @@ def test_running_stats_match_batch_recurrence(spark, sf_dir):
     assert (got["ewma"] - want["ewma"]).abs().max() < 1e-9
 
 
+def test_running_stats_order_spans_arrow_batches(spark, sf_dir, tmp_path):
+    """A group reaches the state function as several Arrow batches; the
+    EWMA must follow (ts, event_id) across all of them, not per batch."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(f"{sf_dir}/events.parquet")
+    order = np.random.default_rng(3).permutation(table.num_rows)
+    pq.write_table(table.take(order), tmp_path / "events.parquet")
+    events = table.to_pandas()
+    # the shuffled file must really put users' events out of order
+    shuffled = events.iloc[order]
+    assert not all(
+        g["ts"].is_monotonic_increasing for _, g in shuffled.groupby("user_id")
+    )
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        got = (
+            run_available_now(
+                running_user_stats(stream_events(spark, str(tmp_path))),
+                "t_stateful_small_batches",
+                output_mode="update",
+            )
+            .toPandas()
+            .set_index("user_id")
+            .sort_index()
+        )
+    finally:
+        spark.conf.set(key, before)
+    want = _expected(read_table(spark, str(tmp_path), "events").toPandas())
+    assert list(got.index) == list(want.index)
+    assert (got["n_events"] == want["n_events"]).all()
+    assert (got["ewma"] - want["ewma"]).abs().max() < 1e-9
+
+
 @pytest.mark.skipif(
     not tws_available(), reason="runtime lacks protobuf for transformWithStateInPandas"
 )

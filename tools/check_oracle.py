@@ -23,7 +23,7 @@ import duckdb  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 from big_data_pipeline_spark.io import TABLES  # noqa: E402
-from big_data_pipeline_spark.session import get_spark  # noqa: E402
+from big_data_pipeline_spark.session import get_spark, usable_cpus  # noqa: E402
 
 
 def _canon_cell(v):
@@ -124,7 +124,7 @@ def main() -> int:
             continue
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    spark = get_spark("check-oracle", master="local[8]")
+    spark = get_spark("check-oracle", master=f"local[{usable_cpus()}]")
     qs, oracle = entrymod.queries(), entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():

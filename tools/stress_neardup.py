@@ -40,7 +40,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from big_data_pipeline_spark.functions.text import exploded_shingles  # noqa: E402
 from big_data_pipeline_spark.io import read_table  # noqa: E402
-from big_data_pipeline_spark.session import get_spark  # noqa: E402
+from big_data_pipeline_spark.session import get_spark, usable_cpus  # noqa: E402
 from big_data_pipeline_spark.workloads.training_data import (  # noqa: E402
     neardup_batch_vs_corpus,
 )
@@ -90,7 +90,7 @@ def measure(spark, sf_dir: str, shingle_dir: str) -> dict:
 
 def main() -> int:
     mode, sf_dir, shingle_dir, *rest = sys.argv[1:]
-    spark = get_spark("stress-neardup", master="local[32]")
+    spark = get_spark("stress-neardup", master=f"local[{usable_cpus()}]")
     if mode == "prepare":
         prepare(spark, sf_dir, shingle_dir)
         print(json.dumps({"prepared": shingle_dir}))
